@@ -33,6 +33,7 @@ from th2_listener_mysql_binlog_go_spark.functions import text as tx
 from th2_listener_mysql_binlog_go_spark.operators.lww import lww_dedup
 from th2_listener_mysql_binlog_go_spark.operators.pairing import pair_alternating
 from th2_listener_mysql_binlog_go_spark.plans.lake import LakeTable
+from th2_listener_mysql_binlog_go_spark.session import local_frame
 from th2_listener_mysql_binlog_go_spark.sources.changestream import (
     DERIVED_DDL_STREAM_SQL,
     DERIVED_MULTI_STREAM_SQL,
@@ -789,7 +790,8 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect())
     flat.unpersist()
     positions = [lo + ((hi - lo) * j) // 4 for j in (1, 2, 3)]
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(repo, path, p) for repo, path in key_rows for p in positions],
         "repo string, path string, as_of_gtid long")
     out = table.asof_join(probes)

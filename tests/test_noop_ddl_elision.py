@@ -5,6 +5,11 @@ fewer segments, the DDLs still apply in order (metrics identical), and the
 converged state is unchanged. A schema-CHANGING ALTER still segments.
 """
 
+import os
+import time
+from datetime import date, datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,3 +103,55 @@ def test_key_buckets_and_bucket_param(spark, tmp_path):
         assert hist_fast == hist_slow
     with pytest.raises(ValueError, match="out of range"):
         t.lookup("r1", "p1", bucket=99).collect()
+
+    # Type fidelity of the Arrow-backed key frames: for every key type,
+    # key_buckets equals the _bucket the writer stored, and lookup_many
+    # returns exactly the written rows (a NULL key component included).
+    # Naive timestamps are converted with the Python process's local zone
+    # on the writer's list path; run under a non-UTC zone (the session
+    # zone is UTC) so a key frame converting with the session zone shows.
+    cases = {
+        "int": [1, -7, 2**31 - 1],
+        "bigint": [2**53 + 1, -(2**62) - 3, 3],
+        "decimal(20,2)": [Decimal("123456789012345678.91"), Decimal("-0.01"),
+                          Decimal("7.00")],
+        "binary": [b"\x00\xff", b"", bytes(range(16))],
+        "date": [date(1969, 12, 31), date(2024, 2, 29), date(2000, 1, 1)],
+        "timestamp": [datetime(2021, 3, 4, 5, 6, 7, 123456),
+                      datetime(1999, 12, 31, 23, 59, 59, 999999),
+                      datetime(2024, 7, 1, 12, 0)],
+    }
+
+    def norm(v):
+        return bytes(v) if isinstance(v, bytearray) else v
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for i, (typ, vals) in enumerate(cases.items()):
+            tt = LakeTable.create(
+                spark, str(tmp_path / f"k{i}"),
+                [("k", typ), ("s", "string"), ("v", "string")],
+                key_cols=["k", "s"], num_buckets=8)
+            rows = [(k, f"s{j}", f"v{j}") for j, k in enumerate(vals)]
+            rows.append((None, "s-null", "v-null"))
+            tt.merge(spark.createDataFrame(
+                [r + ("INSERT", g + 1) for g, r in enumerate(rows)],
+                f"k {typ}, s string, v string, _op string, _gtid long"),
+                batch_id=1, mode="mor")
+            stored = {(norm(r["k"]), r["s"]): r["_bucket"]
+                      for r in tt.read(include_meta=True).collect()}
+            keys = [(k, s) for k, s, _ in rows]
+            assert tt.key_buckets(keys) == [stored[k] for k in keys], typ
+            got = [tuple(map(norm, r)) for r in
+                   tt.lookup_many(keys).select("k", "s", "v").collect()]
+            assert sorted(got, key=repr) == sorted(rows, key=repr), typ
+            for k in (keys[0], keys[-1]):
+                assert tt.lookup(*k).count() == 1, (typ, k)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()

@@ -366,6 +366,7 @@ def cmd_asof(args) -> dict:
     from pyspark.sql import types as T
 
     from .plans.lake import LakeTable
+    from .session import local_frame
 
     spark = _spark("cdc-asof")
     t = LakeTable.load(spark, args.table)
@@ -377,7 +378,7 @@ def cmd_asof(args) -> dict:
             f"expected {len(keys)} key values {tuple(keys)}, got {len(vals)}")
     st = T.StructType([T.StructField(k, T.StringType()) for k in keys]
                       + [T.StructField("as_of_gtid", T.LongType())])
-    probes = spark.createDataFrame([tuple(vals) + (int(args.at),)], st)
+    probes = local_frame(spark, [tuple(vals) + (int(args.at),)], st)
     key_types = {c.name: c.type for c in t.snapshot.columns}
     for k in keys:  # string CLI values -> the table's key types
         probes = probes.withColumn(k, F.col(k).cast(key_types[k]))

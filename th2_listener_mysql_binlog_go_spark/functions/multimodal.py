@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Captured into the decode closures (a plain string pickles by value):
 # Python workers launched with a cwd that can't import this package —
 # any driver not started from the repo root, no --py-files — retry the
@@ -252,7 +254,7 @@ def size_balanced_pack_ids(
         running += t
     n_packs = max(1, -(-running // target_bytes))
     spark = df.sparkSession
-    base_df = spark.createDataFrame(bases, "_sb_chunk bigint, _sb_base bigint")
+    base_df = local_frame(spark, bases, "_sb_chunk bigint, _sb_base bigint")
 
     from pyspark.sql import Window
 

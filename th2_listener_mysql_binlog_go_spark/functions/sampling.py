@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 _HASH_SPACE = 1 << 32  # 8 hex chars
 
 
@@ -127,7 +129,7 @@ def mixture_sample(df: DataFrame, domain_col: str, id_col: str,
         rows.append((d, t))
     if not rows:
         return df.filter(F.lit(False))
-    th = df.sparkSession.createDataFrame(rows, f"{domain_col} string, _th bigint")
+    th = local_frame(df.sparkSession, rows, f"{domain_col} string, _th bigint")
     h = _hash_u32(F.col(id_col), seed)
     return (df.join(F.broadcast(th), domain_col)
             .filter(h < F.col("_th"))

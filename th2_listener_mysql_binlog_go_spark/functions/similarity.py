@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -166,7 +168,8 @@ def ivf_topk(
         "neighbor_id", "cv", F.col("prediction").alias("list_id")
     )
     spark = corpus.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
         "list_id int, cvec array<double>",
     )

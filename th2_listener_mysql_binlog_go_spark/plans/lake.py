@@ -61,6 +61,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 GTID_COL = "_gtid"
 # Within-gtid tiebreaker: real binlogs put several row changes to one key in
 # a single transaction (one GTID) — the reference's total order is
@@ -544,21 +546,21 @@ class LakeTable:
         if clean is not None:
             out = clean if out is None else clean.unionByName(out)
         if out is None:
-            st = _struct_of(snap.columns)
-            out = self.spark.createDataFrame([], st)
+            out = local_frame(self.spark, [], _struct_of(snap.columns))
         if not include_meta:
             out = out.drop(GTID_COL, SEQ_COL, BUCKET_COL)
         return out
 
     def key_buckets(self, key_rows: list[tuple],
                     snapshot: Snapshot | None = None) -> list[int]:
-        """Bucket id per key row (order-preserving), computed by ONE
-        driver-local job through the writers' own Catalyst bucket
-        expression. A caller probing N keys (point-read loops, audit
+        """Bucket id per key row (order-preserving), computed through the
+        writers' own Catalyst bucket expression over a local relation —
+        zero jobs (the key frame is Arrow-backed, see
+        :func:`..session.local_frame`, and the projection folds on the
+        driver). A caller probing N keys (point-read loops, audit
         samples) passes the results to ``lookup(bucket=...)`` /
-        ``key_history(bucket=...)`` — N probes cost one planning job,
-        not N (round-6: 12 sequential ``_key_bucket_snapshot`` jobs were
-        ~2s of cdc_key_history's 5s wall)."""
+        ``key_history(bucket=...)`` — N probes cost one projection, not
+        N planning round trips."""
         snap = snapshot or self.snapshot
         keys = snap.key_names
         if not key_rows:
@@ -569,7 +571,8 @@ class LakeTable:
                     f"expected {len(keys)} key values {tuple(keys)}, "
                     f"got {tuple(kv)}")
         st = _struct_of(snap.columns)
-        kdf = self.spark.createDataFrame(
+        kdf = local_frame(
+            self.spark,
             [tuple(kv) + (i,) for i, kv in enumerate(key_rows)],
             T.StructType([T.StructField(k, st[k].dataType) for k in keys]
                          + [T.StructField("_i", T.LongType())]))
@@ -593,7 +596,9 @@ class LakeTable:
         ``key_values`` follow the table's key column order. Returns an
         empty DataFrame for an absent (or deleted / truncated) key.
         ``bucket``: the key's precomputed bucket id (from
-        :meth:`key_buckets`) — skips the per-call bucket-planning job."""
+        :meth:`key_buckets`); without it the bucket comes from a one-row
+        local relation — zero jobs either way, ``bucket`` only skips the
+        per-call planning round trip."""
         snap = snapshot or self.snapshot
         keys = snap.key_names
         key_types = {c.name: c.type for c in snap.columns}
@@ -608,37 +613,30 @@ class LakeTable:
         """Batch point read: the current rows of a SET of keys (audit
         samples, kill-list checks, feature joins against a small probe
         set) — :meth:`lookup`'s plan generalized to k keys without k
-        jobs. ONE driver-local job computes every key's bucket through
-        the writers' own Catalyst bucket expression; the scan opens only
-        the union of those buckets' files (≤ min(k, num_buckets) of the
-        table); a per-column membership condition (same machinery as
+        jobs. :meth:`key_buckets` computes every key's bucket over a
+        local relation (zero jobs); the scan opens only the union of
+        those buckets' files (≤ min(k, num_buckets) of the table); a
+        per-column membership condition (same machinery as
         ``changes()``' keyset pushdown — whole key groups pass or fail
         together, so it commutes with the LWW window and reaches the
         parquet scans as ``In`` filters, bloom/stats-prunable); and an
-        exact broadcast left-semi join removes the per-column cross
-        products ``isin`` over-selects. Keys follow the table's key
-        column order; absent / deleted keys simply return no row."""
+        exact broadcast left-semi join — its probe side another local
+        relation, so the broadcast job needs no Python worker — removes
+        the per-column cross products ``isin`` over-selects. Keys follow the
+        table's key column order; absent / deleted keys simply return no
+        row."""
         snap = snapshot or self.snapshot
         keys = snap.key_names
         key_types = {c.name: c.type for c in snap.columns}
-        for kv in key_rows:
-            if len(kv) != len(keys):
-                raise ValueError(
-                    f"expected {len(keys)} key values {tuple(keys)}, "
-                    f"got {tuple(kv)}")
         if not key_rows:
             return self.read(include_meta=include_meta,
                              snapshot=snap.sub([]))
+        # key_buckets validates the key arity
+        buckets = set(self.key_buckets(key_rows, snap))
         st = _struct_of(snap.columns)
-        kdf = self.spark.createDataFrame(
-            [tuple(kv) for kv in key_rows],
+        kdf = local_frame(
+            self.spark, key_rows,
             T.StructType([T.StructField(k, st[k].dataType) for k in keys]))
-        bucket_of = self._bucket_expr_of(keys, snap.num_buckets)
-        # no distinct(): the keyset is driver-bounded already, and a
-        # distinct over a local relation inserts a whole shuffle stage
-        # for what a python set does for free
-        buckets = {r["b"] for r in
-                   kdf.select(bucket_of.alias("b")).collect()}
         sub = snap.sub([fi for fi in snap.files if fi["bucket"] in buckets])
         out = self.read(include_meta=include_meta, snapshot=sub)
         # capped like changes()' keyset pushdown: a giant In literal list
@@ -659,11 +657,11 @@ class LakeTable:
     def _key_bucket_snapshot(self, snap: "Snapshot", key_values: tuple,
                              bucket: int | None = None) -> "Snapshot":
         """Sub-snapshot holding only the files of ``key_values``' bucket.
-        The bucket is computed by one driver-local row through the SAME
-        Catalyst expression the writers use (no hand-rolled xxhash64
-        parity to maintain), a single-task job — or supplied precomputed
-        (``bucket``, from :meth:`key_buckets`' one-job batch) so N-key
-        probe loops don't pay N planning jobs."""
+        The bucket is computed by one row of a local relation through
+        the SAME Catalyst expression the writers use (no hand-rolled
+        xxhash64 parity to maintain) — zero jobs — or supplied
+        precomputed (``bucket``, from :meth:`key_buckets`' batch) so
+        N-key probe loops skip N planning round trips."""
         keys = snap.key_names
         if len(key_values) != len(keys):
             raise ValueError(
@@ -679,11 +677,12 @@ class LakeTable:
         key_types = {c.name: c.type for c in snap.columns}
         # snap's bucketing, not head's (time travel across a rebucket)
         bucket_of = self._bucket_expr_of(keys, snap.num_buckets)
-        b = (self.spark.range(1)
+        # literals cast like lookup()'s key filter (the CLI passes strings)
+        b = (local_frame(self.spark, [(0,)], "_one int")
              .select(*[F.lit(v).cast(key_types[k]).alias(k)
                        for k, v in zip(keys, key_values)])
              .select(bucket_of.alias("b"))
-             .first()["b"])
+             .collect()[0]["b"])
         return snap.sub([fi for fi in snap.files if fi["bucket"] == b])
 
     def key_history(self, *key_values,
@@ -732,8 +731,8 @@ class LakeTable:
               if base is not None and delta is not None else (base or delta))
         if df is None:
             # _struct_of already carries (_gtid, _seq, _bucket) + _op
-            df = self.spark.createDataFrame(
-                [], _struct_of(snap.columns, with_op=True))
+            df = local_frame(
+                self.spark, [], _struct_of(snap.columns, with_op=True))
         for k, v in zip(keys, key_values):
             df = df.filter(F.col(k).eqNullSafe(F.lit(v).cast(key_types[k])))
         if trunc >= 0:
@@ -782,8 +781,8 @@ class LakeTable:
         df = (base.unionByName(delta)
               if base is not None and delta is not None else (base or delta))
         if df is None:
-            df = self.spark.createDataFrame(
-                [], _struct_of(snap.columns, with_op=True))
+            df = local_frame(
+                self.spark, [], _struct_of(snap.columns, with_op=True))
         if trunc >= 0:
             df = df.filter(F.col(GTID_COL) > trunc)
         cols = [c.name for c in snap.columns]
@@ -832,14 +831,8 @@ class LakeTable:
             sample = (probes.select(*keys).distinct()
                       .limit(keyset_pushdown_max + 1).collect())
             if len(sample) <= keyset_pushdown_max:
-                st = _struct_of(snap.columns)
-                kdf = self.spark.createDataFrame(
-                    [tuple(r[k] for k in keys) for r in sample],
-                    T.StructType([T.StructField(k, st[k].dataType)
-                                  for k in keys]))
-                bucket_of = self._bucket_expr_of(keys, snap.num_buckets)
-                buckets = {r["b"] for r in
-                           kdf.select(bucket_of.alias("b")).collect()}
+                buckets = set(self.key_buckets(
+                    [tuple(r[k] for k in keys) for r in sample], snap))
                 membership = self._membership_cond(
                     [dict(zip(keys, (r[k] for k in keys))) for r in sample],
                     keys)
@@ -1337,7 +1330,7 @@ class LakeTable:
             if with_before:
                 fields.append(T.StructField("_before", T.StructType(
                     [by_name[v] for v in val_cols])))
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return local_frame(self.spark, [], T.StructType(fields))
 
         if use == "incremental":
             from_paths = {fi["path"] for fi in from_snap.files}

@@ -57,6 +57,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
 from .lake import GTID_COL, OP_COL, LakeTable
 
 _ROWCNT = "_rowcnt"  # hidden liveness count: group row is deleted at 0
@@ -431,7 +432,7 @@ class IncrementalAggView:
                 ddl = ", ".join(
                     f"`{n}` {t}" for n, t in self._view_schema()
                 ) + f", `{OP_COL}` string, `{GTID_COL}` bigint"
-                rows = self.spark.createDataFrame([], ddl)
+                rows = local_frame(self.spark, [], ddl)
             else:
                 rows = self._recompute_rows(touched, probe, dcols, to_v)
         except BaseException:

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _default_driver_memory() -> str:
@@ -89,3 +90,36 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: T.StructType | str) -> DataFrame:
+    """A driver-built DataFrame as an Arrow-backed local relation.
+
+    ``spark.createDataFrame(<python list>)`` ships the rows through a
+    Python RDD, so every collect / broadcast of such a frame launches a
+    Python-worker job (~0.3 s of scheduling for a handful of rows). An
+    Arrow table instead lands in the plan as a ``LocalRelation``:
+    collecting or projecting it launches zero jobs, and broadcasting it
+    runs a JVM-only job. Every driver-built frame in the package goes
+    through here.
+
+    ``rows``: tuples in ``schema``'s field order; ``schema``: a StructType
+    or a DDL string. Naive ``TimestampType`` values are converted with the
+    Python process's local zone, exactly as the list path does
+    (``TimestampType.toInternal``), so key frames keep hashing like the
+    rows the writers stored.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = []
+    for i, (field, atype) in enumerate(zip(schema.fields, arrow_schema.types)):
+        col = [r[i] for r in rows]
+        if isinstance(field.dataType, T.TimestampType):
+            col = [field.dataType.toInternal(v) for v in col]
+        arrays.append(pa.array(col, type=atype))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
